@@ -579,6 +579,15 @@ private[graft] object BucketState {
     * schema evolution over at-rest state without rewriting untouched
     * buckets. Without it the per-version schemas are inferred (and must
     * agree), the pre-evolution behavior.
+    *
+    * Each version's dirs are read in groups no larger than the session's
+    * `parallelPartitionDiscovery.threshold`: one `parquet(...)` call over
+    * more paths than that launches a Spark listing job (one task per
+    * dir), which at 64 buckets cost more than the read it served. Below
+    * the threshold the dirs are listed serially on the driver — cheap
+    * because the paths are known leaf dirs, never a scan of the whole
+    * state root. Without `readSchema` only a version's first group infers
+    * its schema (one footer job, as before); the rest reuse it.
     */
   def readBuckets(spark: SparkSession, stateDir: String,
                   manifest: Map[Long, Set[Long]], empty: => DataFrame,
@@ -586,10 +595,17 @@ private[graft] object BucketState {
       : DataFrame = {
     val pairs = manifest.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
     if (pairs.isEmpty) return empty
-    pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, entries) =>
-      val reader = spark.read.option("basePath", s"$stateDir/v=$v")
-      readSchema.fold(reader)(reader.schema)
-        .parquet(entries.map(_._2).sorted.map(b => s"$stateDir/v=$v/p=$b"): _*)
+    val group = math.max(1,
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    pairs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (v, entries) =>
+      def read(schema: Option[org.apache.spark.sql.types.StructType], bs: Seq[Long]) = {
+        val reader = spark.read.option("basePath", s"$stateDir/v=$v")
+        schema.fold(reader)(reader.schema)
+          .parquet(bs.map(b => s"$stateDir/v=$v/p=$b"): _*)
+      }
+      val groups = entries.map(_._2).sorted.grouped(group).toSeq
+      val first = read(readSchema, groups.head)
+      first +: groups.tail.map(read(Some(readSchema.getOrElse(first.schema)), _))
     }.reduce(_.unionByName(_))
   }
 

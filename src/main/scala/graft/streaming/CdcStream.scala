@@ -354,8 +354,7 @@ object CdcStream {
           // nullable, so their absence is data, not a partial parse
           val changelog = Changelog.changelogOfParsed(parsed, None, spec)
           applyPartitionedBatch(changelog, batchId, auditDir, stateDir,
-            nBuckets, espec,
-            stateReadSchema = Some(stateSchemaFor(espec, etype)))
+            nBuckets, espec)
         } finally cached.unpersist()
         ()
       }
@@ -567,7 +566,7 @@ object CdcStream {
 
   /** State-file schema of the partitioned replica for a (spec, image)
     * pair, INCLUDING the `p` partition column — the explicit read schema
-    * the evolving merge pins bucket reads to.
+    * every replace-merge bucket read is pinned to.
     */
   private def stateSchemaFor(spec: CdcSchema.CdcTableSpec,
                              imageType: org.apache.spark.sql.types.StructType)
@@ -592,12 +591,7 @@ object CdcStream {
                                  tableName: String = "invoice"): DataFrame = {
     val (espec, etype) =
       evolvedSpec(spark, schemaHistoryDir, spec, imageType, tableName)
-    snapshotOfFor(
-      BucketState.readBuckets(spark, stateDir,
-        readManifest(spark, stateDir).buckets,
-        emptyStateFor(spark, espec, etype).withColumn("p", lit(-1L)),
-        Some(stateSchemaFor(espec, etype))).drop("p"),
-      espec)
+    partitionedSnapshotFor(spark, stateDir, espec, etype)
   }
 
   /** Version numbers under `stateDir`, newest first. */
@@ -725,10 +719,11 @@ object CdcStream {
 
   /** One [[runPartitioned]] micro-batch, callable from any foreachBatch
     * wrapper (the evolving ingress re-derives `spec` per batch before
-    * delegating here). `stateReadSchema`, when given, pins the bucket
-    * reads to an explicit (wider) schema so state written under an older
-    * image struct null-fills instead of failing the union — see
-    * `BucketState.readBuckets`. `stateReader`, when given, REPLACES the
+    * delegating here). Prior state is read under the explicit state
+    * schema of `spec` and the batch's own image type, so state written
+    * under an older, narrower image struct null-fills instead of failing
+    * the union (see `BucketState.readBuckets`) and no read pays a
+    * schema-inference footer job. `stateReader`, when given, REPLACES the
     * bucket read entirely (it receives the relevant slice of the
     * manifest and must return state in the CURRENT merge schema — the
     * full-DDL runner's per-version identity remap). `onStaged` runs with
@@ -739,7 +734,6 @@ object CdcStream {
   private[graft] def applyPartitionedBatch(
       rawBatch: DataFrame, batchId: Long, auditDir: String, stateDir: String,
       nBuckets: Int, spec: CdcSchema.CdcTableSpec,
-      stateReadSchema: Option[org.apache.spark.sql.types.StructType] = None,
       stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
       onStaged: Option[String => Unit] = None): Unit = {
     import scala.concurrent.{Await, Future}
@@ -813,38 +807,30 @@ object CdcStream {
           BucketState.gcVersions(spark, stateDir)
           case BucketState.Proceed(newVersion) =>
         val touched = (batchBuckets :+ -1L).toSet
-        val prev =
-          if (manifest.isEmpty)
-            emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L))
-          else {
-            // horizon moved ⇒ every bucket is affected; otherwise read
-            // only the touched buckets (partition-pruned per version dir)
-            val relevant =
-              if (hasTruncate) manifest
-              else manifest.view.filterKeys(touched).toMap
-            stateReader match {
-              case Some(rd) => rd(relevant)
-              case None => BucketState.readBuckets(spark, stateDir, relevant,
-                emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)),
-                stateReadSchema)
-            }
-          }
+        // horizon moved ⇒ every bucket is affected; otherwise read only
+        // the touched buckets (partition-pruned per version dir)
+        val relevant =
+          if (hasTruncate) manifest
+          else manifest.view.filterKeys(touched).toMap
+        val prev = stateReader match {
+          case Some(rd) if relevant.nonEmpty => rd(relevant)
+          case _ => readBuckets(spark, stateDir, relevant, spec, imageType)
+        }
 
         // (1) Stage this batch's buckets under its OWN version dir —
         // strictly newer than anything `prev` reads (checkBatch
         // guarantees it), so no overwrite-what-you-read hazard and no
-        // extra staging copy. repartition by p, RIGHT-SIZED to the
-        // touched-bucket count: a delta touching 5 of 64 buckets gets 5
-        // merge tasks, not shuffle-partitions-many mostly-empty ones —
-        // scheduling overhead is the dominant per-commit cost at
-        // micro-batch sizes, and one task per bucket dir still writes
-        // one file per dir (a big backfill touches every bucket, so its
-        // task count is nBuckets — same layout as before).
+        // extra staging copy. repartition by p into at most one task per
+        // core ([[writeTasks]]): hash partitioning still sends each
+        // bucket to exactly one task, so the layout stays one file per
+        // touched `p=` dir, while a backfill touching all 64 buckets
+        // runs 4 write tasks on 4 cores, not 64 — per-task scheduling
+        // is the dominant per-commit cost at micro-batch sizes.
         tr("merge_write")(mergeBatch(prev.drop("p"), batch, spec = spec)
           .withColumn("p",
             when(col("key").isNull, lit(-1L))
               .otherwise(bucketOf(col("key"), keyType)))
-          .repartition(touched.size, col("p"))
+          .repartition(writeTasks(spark, touched.size), col("p"))
           .write.mode("overwrite").partitionBy("p").parquet(s"$stateDir/v=$newVersion"))
         onStaged.foreach(_(s"$stateDir/v=$newVersion"))
 
@@ -1050,10 +1036,10 @@ object CdcStream {
         // key-null horizon-row shape directly; the key gate keeps a
         // hand-built keyless non-truncate event from poisoning the
         // horizon (same guard as mergeBatch's ingress).
-        // repartition(nBuckets): the touched-bucket count isn't known yet
-        // (the stats job is still running); at LSM bucket counts (≤64)
-        // the empty shuffle partitions cost scheduling-only, and the
-        // parquet writer emits no dir for them.
+        // Sized by nBuckets, not the touched-bucket count (the stats job
+        // is still running), capped at one task per core like the
+        // replace-merge write: each bucket still lands in one task, so
+        // one file per touched `p=` dir.
         tr("segment_write")(batch
           .filter(
             coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}"))
@@ -1066,7 +1052,7 @@ object CdcStream {
           .withColumn("p",
             when(col("key").isNull, lit(-1L))
               .otherwise(bucketOf(col("key"), keyType)))
-          .repartition(nBuckets, col("p"))
+          .repartition(writeTasks(spark, nBuckets), col("p"))
           .write.mode("overwrite").partitionBy("p")
           .parquet(s"$stateDir/v=$newVersion"))
         val statRow = tr("stats_await")(Await.result(statF, Duration.Inf))
@@ -1526,10 +1512,25 @@ object CdcStream {
                              fp: Option[(Long, Long)]): Unit =
     BucketState.commitManifest(spark, stateDir, manifest, fp)
 
+  /** Replace-merge state read under the explicit state schema of
+    * `(spec, imageType)` — no footer job, and an empty manifest yields an
+    * empty state of the same shape.
+    */
   private def readBuckets(spark: SparkSession, stateDir: String,
-                          manifest: Map[Long, Set[Long]]): DataFrame =
+                          manifest: Map[Long, Set[Long]],
+                          spec: CdcSchema.CdcTableSpec,
+                          imageType: org.apache.spark.sql.types.StructType): DataFrame =
     BucketState.readBuckets(spark, stateDir, manifest,
-      emptyState(spark).withColumn("p", lit(-1L)))
+      emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)),
+      Some(stateSchemaFor(spec, imageType)))
+
+  /** Task count of a bucket-partitioned state write touching `buckets`
+    * buckets: at most one task per core. A task may then write several
+    * `p=` dirs, but hash partitioning by `p` still gives each dir exactly
+    * one writer, so the layout stays one file per dir.
+    */
+  private def writeTasks(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
 
   private def listBuckets(spark: SparkSession, versionDir: String): Seq[Long] =
     BucketState.listBuckets(spark, versionDir)
@@ -1541,15 +1542,19 @@ object CdcStream {
     * `_CURRENT` manifest — readers never see an uncommitted version dir.
     */
   def partitionedSnapshot(spark: SparkSession, stateDir: String): DataFrame =
-    snapshotOf(readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets).drop("p"))
+    snapshotOf(readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets,
+      CdcSchema.invoiceSpec, CdcSchema.invoiceType).drop("p"))
 
   /** [[partitionedSnapshot]] for an arbitrary table spec (no UInt64
-    * widening — natural column types).
+    * widening — natural column types). `imageType` is the row image the
+    * state was written under; it has no default, so a non-invoice table
+    * can never be read (or, with no commit yet, zero-stated) as invoice.
     */
   def partitionedSnapshotFor(spark: SparkSession, stateDir: String,
-                             spec: CdcSchema.CdcTableSpec): DataFrame =
-    snapshotOfFor(
-      readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets).drop("p"), spec)
+                             spec: CdcSchema.CdcTableSpec,
+                             imageType: org.apache.spark.sql.types.StructType): DataFrame =
+    snapshotOfFor(readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets,
+      spec, imageType).drop("p"), spec)
 
   /** Newest state version under `stateDir`, if any. */
   def latestStateVersion(spark: SparkSession, stateDir: String): Option[(Long, DataFrame)] = {

@@ -373,9 +373,17 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(dirs.forall(d => d.stripPrefix("p=").toLong >= -1L
       && d.stripPrefix("p=").toLong < 8L), dirs.mkString(","))
     val snap = graft.streaming.CdcStream
-      .partitionedSnapshotFor(spark, s"$base/state", skuSpec)
+      .partitionedSnapshotFor(spark, s"$base/state", skuSpec, skuType)
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(snap === Seq(("ab-1", 6), ("zz-9", 7)))
+    // a state dir with no commit yet reads as an empty replica of the
+    // table's own shape, not an invoice-shaped zero state
+    val empty = graft.streaming.CdcStream
+      .partitionedSnapshotFor(spark, s"$base/never-committed", skuSpec, skuType)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ===
+      Seq("sku" -> org.apache.spark.sql.types.StringType,
+        "qty" -> org.apache.spark.sql.types.IntegerType))
+    assert(empty.count() === 0)
   }
 
   test("checkpoint reset over retained state with DIFFERENT data fails loudly") {
