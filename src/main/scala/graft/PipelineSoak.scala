@@ -508,24 +508,24 @@ object PipelineSoak {
         // store's root manifest is dead state — compacting it would
         // fold nothing and GC against the wrong manifest).
         val vecLive = operators.IncrementalVecIndex.liveDir(s, vecDir)
-        val folds: Seq[(String, Int, DataFrame => DataFrame)] = Seq(
-          (exactDir, compactWhenSegments,
+        val folds: Seq[(String, Int, DataFrame, DataFrame => DataFrame)] = Seq(
+          (exactDir, compactWhenSegments, operators.IncrementalDedup.emptyIdx(s),
             operators.Retraction.foldTombstones(_, "doc_id")),
-          (ndDir, compactWhenSegments / 2,
+          (ndDir, compactWhenSegments / 2, operators.IncrementalNearDup.emptyIdx(s),
             operators.Retraction.foldTombstones(_, "doc_id",
               keepTombstones = true)),
-          (kbDir, compactWhenSegments / 2 + 1,
+          (kbDir, compactWhenSegments / 2 + 1, operators.IncrementalKeepBest.emptyIdx(s),
             operators.Retraction.foldTombstones(_, "doc_id",
               exempt = Some(col("band") === -3L))),
-          (vecLive, compactWhenSegments + 3,
+          (vecLive, compactWhenSegments + 3, operators.IncrementalVecIndex.emptyIdx(s),
             operators.Retraction.foldTombstones(_, "vec_id")))
-        folds.foreach { case (d, threshold, resolve) =>
+        folds.foreach { case (d, threshold, empty, resolve) =>
           val m = streaming.BucketState.readManifest(s, d)
           val maxSegs =
             if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
           if (maxSegs >= threshold)
             streaming.BucketState.maybeCompactConcurrent(s, d, async = true,
-              resolve = resolve)
+              empty, resolve)
         }
         batchEnds.add(System.nanoTime())
         ()

@@ -38,7 +38,7 @@ object IncrementalDedup {
   private def bucketOf(fp: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(xxhash64(fp), lit(nBuckets.toLong))
 
-  private def emptyIdx(spark: SparkSession): DataFrame =
+  private[graft] def emptyIdx(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       survivorSchema.add("p", LongType))
@@ -160,18 +160,13 @@ object IncrementalDedup {
                   .withColumn("p", lit(BucketState.AnswerBucket)))
               // tombstone rows ride the same segment and the same
               // commit: (fp = null, doc_id, p = TombBucket)
-              retract.fold(segRows)(r => segRows.unionByName(
+              val outBuckets = BucketState.stageVersion(
+                retract.fold(segRows)(r => segRows.unionByName(
                   r.select(lit(null).cast(StringType).as("fp"),
-                    col("doc_id"), lit(Retraction.TombBucket).as("p"))))
-                .repartition(col("p"))
-                .write.mode("overwrite").partitionBy("p")
-                .parquet(s"$indexDir/v=$physicalVersion")
+                    col("doc_id"), lit(Retraction.TombBucket).as("p")))),
+                s"$indexDir/v=$physicalVersion", touched.size + 2,
+                answer = Some(survivorsDir -> survivorSchema))
               survivors.unpersist()
-              BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
-                survivorsDir, survivorSchema)
-
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
               BucketState.manifestLock(indexDir).synchronized {
                 val mNow = BucketState.readManifest(spark, indexDir)
                 val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
@@ -251,7 +246,7 @@ object IncrementalDedup {
             (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
         if (due)
           BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            resolve = Retraction.foldTombstones(_, "doc_id"))
+            emptyIdx(spark), Retraction.foldTombstones(_, "doc_id"))
         ()
       }
       .start()

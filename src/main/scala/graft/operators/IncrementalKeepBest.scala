@@ -119,7 +119,7 @@ object IncrementalKeepBest {
   private def kindBucketOf(kind: Long, key: Column, nBuckets: Int): Column =
     pmod(xxhash64(lit(kind), key.cast("string")), lit((nBuckets - 1).toLong))
 
-  private def emptyIdx(spark: SparkSession): DataFrame =
+  private[graft] def emptyIdx(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       rowSchema.add("p", LongType))
@@ -567,7 +567,7 @@ object IncrementalKeepBest {
                      .select(col("a").as("doc_a"), col("b").as("doc_b")),
                    probeBuckets)
               }
-              try {
+              val outBuckets = try {
                 // ---- seen-side label resolution -----------------------
                 val seenLab = edgesSeen.join(
                     readKind(memberBuckets, -2L)
@@ -737,13 +737,9 @@ object IncrementalKeepBest {
                     nullSig.as("sig"), lit(null).cast("long").as("label"),
                     lit(null).cast("double").as("score"),
                     lit(Retraction.TombBucket).as("p"))))
-                tr("segment_write")(
-                  segWithTombs
-                    .repartition(col("p"))
-                    .write.mode("overwrite").partitionBy("p")
-                    .parquet(s"$indexDir/v=$physicalVersion"))
-                BucketState.claimAnswer(spark,
-                  s"$indexDir/v=$physicalVersion", membersDir, memberSchema)
+                val out = tr("segment_write")(BucketState.stageVersion(segWithTombs,
+                  s"$indexDir/v=$physicalVersion", nBuckets + 2,
+                  answer = Some(membersDir -> memberSchema)))
 
                 // release this batch's component-pass checkpoints (tracked
                 // diff — same exposure as clustersOf's own internal
@@ -761,9 +757,8 @@ object IncrementalKeepBest {
                     .foreach(_.unpersist(blocking = false)))
                 seenLab.unpersist()
                 if (ownEdges) edgesSeen.unpersist()
+                out
               } finally scratchToRelease.foreach(_.unpersist())
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
               BucketState.manifestLock(indexDir).synchronized {
                 val mNow = BucketState.readManifest(spark, indexDir)
                 val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>

@@ -88,16 +88,18 @@ object IncrementalNearDup {
 
   private val admittedSchema = StructType(Seq(StructField("doc_id", LongType)))
 
+  private[graft] def emptyIdx(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      bandSchema.add("p", LongType))
+
   /** Stored tombstone ids `(doc_id)` — one pruned read of the reserved
     * bucket (see [[Retraction]] for the takedown design).
     */
   private def storedTombs(spark: SparkSession, indexDir: String,
                           m: BucketState.Manifest): DataFrame = {
-    val emptyIdx = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema.add("p", LongType))
     BucketState.readBuckets(spark, indexDir,
-      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap, emptyIdx)
+      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap, emptyIdx(spark))
       .select(col("doc_id"))
   }
 
@@ -278,15 +280,12 @@ object IncrementalNearDup {
     */
   def preReadTouched(spark: SparkSession, indexDir: String,
                      bandsSuperset: DataFrame, nBuckets: Int = 64): DataFrame = {
-    val emptyIdx = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema.add("p", LongType))
     val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
     try {
       val groups0 = bandsSuperset.select(col("band"), col("bh")).distinct()
       val touched0 = groups0.select(bucketOf(nBuckets).as("p")).distinct()
         .collect().map(_.getLong(0)).toSet
-      BucketState.readStoreView(spark, indexDir, m, emptyIdx)
+      BucketState.readStoreView(spark, indexDir, m, emptyIdx(spark))
         .filter(col("p").isin(touched0.toSeq: _*))
         .filter(col("band") >= 0)
         .select(col("band"), col("bh"), col("doc_id"))
@@ -402,9 +401,6 @@ object IncrementalNearDup {
                             replayFloor: Option[Long] = None,
                             prevBandsIn: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
-    val emptyIdx = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema.add("p", LongType))
     def ownRowsExcluded(df: DataFrame, idCol: Column): DataFrame =
       replayFloor.map(f => df.filter(idCol < lit(f))).getOrElse(df)
     val batchGroups = bands.select(col("band"), col("bh")).distinct()
@@ -413,7 +409,7 @@ object IncrementalNearDup {
     // batch-sized delta leaf; the touched/sig/sk bucket prunes become
     // in-memory filters over the cached rows — same rows, same plans
     // downstream (StoreViewSpec pins view ≡ direct)
-    val view = BucketState.readStoreView(spark, indexDir, m, emptyIdx)
+    val view = BucketState.readStoreView(spark, indexDir, m, emptyIdx(spark))
     // surviving pre-batch stored band rows of the touched buckets —
     // UNRESTRICTED (no group semi-join): the guard consumes this form
     // directly so its job is two stages (partial + final aggregate over
@@ -811,21 +807,16 @@ object IncrementalNearDup {
               val dataRows = bandKeys.unionByName(sigRows).unionByName(skRows)
                 .withColumn("p", bucketOf(nBuckets))
                 .unionByName(answerRows)
-              tr("segment_write")(
+              val outBuckets = tr("segment_write")(BucketState.stageVersion(
                 retract.fold(dataRows)(r => dataRows.unionByName(
                     r.select(lit(-9L).as("band"), lit("").as("bh"),
                       col("doc_id"),
                       lit(null).cast(ArrayType(LongType, containsNull = false))
                         .as("sig"),
-                      lit(Retraction.TombBucket).as("p"))))
-                  .repartition(col("p"))
-                  .write.mode("overwrite").partitionBy("p")
-                  .parquet(s"$indexDir/v=$physicalVersion"))
-              tr("claim_list_commit") {
-                BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
-                  admittedDir, admittedSchema)
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
+                      lit(Retraction.TombBucket).as("p")))),
+                s"$indexDir/v=$physicalVersion", nBuckets + 2,
+                answer = Some(admittedDir -> admittedSchema)))
+              tr("commit") {
               BucketState.manifestLock(indexDir).synchronized {
                 val mNow = BucketState.readManifest(spark, indexDir)
                 val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
@@ -881,7 +872,7 @@ object IncrementalNearDup {
             (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
         if (due)
           BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            resolve = Retraction.foldTombstones(_, "doc_id",
+            emptyIdx(spark), Retraction.foldTombstones(_, "doc_id",
               keepTombstones = true))
         ()
       }

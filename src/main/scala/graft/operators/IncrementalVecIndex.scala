@@ -130,7 +130,7 @@ object IncrementalVecIndex {
     StructField("cell", LongType), StructField("vec_id", LongType),
     StructField("codes", ArrayType(IntegerType, containsNull = false))))
 
-  private def emptyIdx(spark: SparkSession): DataFrame =
+  private[graft] def emptyIdx(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       rowSchema.add("p", LongType))
@@ -158,17 +158,8 @@ object IncrementalVecIndex {
     new org.apache.hadoop.fs.Path(s"$indexDir/_GEN")
 
   /** The live generation number, if a cutover has ever completed. */
-  def liveGen(spark: SparkSession, indexDir: String): Option[Long] = {
-    val p = genPtr(indexDir)
-    val f = BucketState.hadoopFs(spark, p.toString)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-      s.toLongOption
-    }
-  }
+  def liveGen(spark: SparkSession, indexDir: String): Option[Long] =
+    BucketState.readAtomically(spark, genPtr(indexDir).toString).flatMap(_.trim.toLongOption)
 
   /** The directory of the live generation's store (the root for a store
     * that never cut over — a resolved gen dir has no pointer of its own,
@@ -312,7 +303,7 @@ object IncrementalVecIndex {
     spark.createDataFrame(cents.zipWithIndex.toSeq
         .map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite")
+      .coalesce(1).write.options(BucketState.writeOptions).mode("overwrite")
       .parquet(s"$indexDir/params/centroids")
     Similarity.writeCodebooks(spark, s"$indexDir/params", cbs)
     // marker AFTER both writes: a crash between them replays the (pure,
@@ -436,17 +427,13 @@ object IncrementalVecIndex {
             // (cell = -1, vec_id, codes = null, p = TombBucket)
             val dataRows = rows.withColumn("p",
               bucketCol(params.centroids.length, col("cell")))
-            tr("encode_write")(
+            val outBuckets = tr("encode_write")(BucketState.stageVersion(
               retract.fold(dataRows)(r => dataRows.unionByName(
                   r.select(lit(-1L).as("cell"), col("vec_id"),
                     lit(null).cast(ArrayType(IntegerType, containsNull = false))
                       .as("codes"),
-                    lit(Retraction.TombBucket).as("p"))))
-                .repartition(col("p"))
-                .write.mode("overwrite").partitionBy("p")
-                .parquet(s"$indexDir/v=$physicalVersion"))
-            val outBuckets = tr("list_buckets")(
-              BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion"))
+                    lit(Retraction.TombBucket).as("p")))),
+              s"$indexDir/v=$physicalVersion", params.centroids.length + 1))
             tr("commit")(BucketState.manifestLock(indexDir).synchronized {
               val mNow = BucketState.readManifest(spark, indexDir)
               val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
@@ -576,7 +563,7 @@ object IncrementalVecIndex {
   def maybeCompactConcurrent(spark: SparkSession, indexDir: String,
                              async: Boolean = false): Unit =
     BucketState.maybeCompactConcurrent(spark, liveDir(spark, indexDir), async,
-      resolve = Retraction.foldTombstones(_, "vec_id"))
+      emptyIdx(spark), Retraction.foldTombstones(_, "vec_id"))
 
   /** Build generation N+1 from the accumulated corpus and atomically cut
     * the serving pointer over to it. The old generation serves every
@@ -631,24 +618,16 @@ object IncrementalVecIndex {
     val encIn =
       if (clean.rdd.getNumPartitions < math.min(nParts, 8)) clean.repartition(nParts)
       else clean
-    encodeWithParams(spark, readParams(spark, nextDir), encIn)
-      .withColumn("p", bucketCol(cents.length, col("cell")))
-      .repartition(col("p"))
-      .write.mode("overwrite").partitionBy("p")
-      .parquet(s"$nextDir/v=$v")
-    val buckets = BucketState.listBuckets(spark, s"$nextDir/v=$v")
+    val buckets = BucketState.stageVersion(
+        encodeWithParams(spark, readParams(spark, nextDir), encIn)
+          .withColumn("p", bucketCol(cents.length, col("cell"))),
+        s"$nextDir/v=$v", cents.length)
       .map(_ -> Set(v)).toMap
     // replay record carried over verbatim — the batch chain continues
     BucketState.commitManifest(spark, nextDir, buckets, Some(v -> h))
     beforeSwap()
     // THE cutover: one atomic pointer rename
-    val fs = BucketState.hadoopFs(spark, indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/_GEN.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(nextGen.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(genPtr(indexDir).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, genPtr(indexDir), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    BucketState.writeAtomically(spark, genPtr(indexDir).toString, nextGen.toString)
     nextGen
   }
 

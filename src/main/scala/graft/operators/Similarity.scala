@@ -608,7 +608,8 @@ object Similarity {
       (c, code) <- cb.zipWithIndex
     } yield (j, code, c.toSeq)
     s.createDataFrame(rows).toDF("j", "code", "centroid")
-      .write.mode("overwrite").parquet(s"$out/codebooks")
+      .write.options(graft.streaming.BucketState.writeOptions).mode("overwrite")
+      .parquet(s"$out/codebooks")
   }
 
   /** Persist the k coarse centroids as (cell, centroid) rows — the

@@ -387,9 +387,115 @@ private[graft] object BucketState {
     * local, HDFS, and object-store state dirs alike (java.io.File would
     * silently see "no state" on any non-local URI and discard prior state).
     */
-  def hadoopFs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def hadoopFs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (isLocal(p, conf)) local(conf).fs else p.getFileSystem(conf)
+  }
+
+  // ---- fork-free local filesystem -------------------------------------
+  //
+  // Without the native Hadoop library the stock local filesystem runs
+  // `chmod` as a child process for every dir, data file and `.crc` it
+  // creates, and `readlink` four times per rename-over commit: at the
+  // benchmark's sizes, nine in ten of a curation run's process launches.
+  // Store-owned writes and commits on `file:` paths go through
+  // [[ForkFreeLocalFileSystem]] instead. Spark writes pick it up from the
+  // write's own options ([[writeOptions]]: `fs.file.impl`, plus cache
+  // disabling so the cached stock instance is not returned); the session
+  // config is never changed, and other schemes are untouched.
+
+  /** One filesystem pair per Hadoop conf (the session's, by identity,
+    * never copied): the conf is read live, so umask changes still apply.
+    */
+  private final class Local(val conf: org.apache.hadoop.conf.Configuration) {
+    val fs: org.apache.hadoop.fs.FileSystem = {
+      val f = new ForkFreeLocalFileSystem
+      f.initialize(java.net.URI.create("file:///"), conf)
+      f
+    }
+    val afs = new ForkFreeLocalFs(java.net.URI.create("file:///"), conf)
+  }
+  @volatile private var localFs: Local = null
+
+  private def local(conf: org.apache.hadoop.conf.Configuration): Local = {
+    val cur = localFs
+    if (cur != null && (cur.conf eq conf)) cur
+    else { val l = new Local(conf); localFs = l; l }
+  }
+
+  private def isLocal(p: org.apache.hadoop.fs.Path,
+                      conf: org.apache.hadoop.conf.Configuration): Boolean =
+    Option(p.toUri.getScheme)
+      .getOrElse(org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme) == "file"
+
+  /** Options for every store-owned DataFrame write: they bind `file:` to
+    * the fork-free filesystem for that write only.
+    */
+  val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Write `content` to `path` through `path.tmp` and one atomic rename
+    * over `path` (`FileContext.rename(OVERWRITE)`; plain
+    * `FileSystem.rename` won't clobber on local/HDFS). On stores without
+    * atomic rename the deployment pins the manifest elsewhere.
+    */
+  def writeAtomically(spark: SparkSession, path: String, content: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
+    val out = hadoopFs(spark, path).create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    val fc =
+      if (isLocal(dst, conf)) org.apache.hadoop.fs.FileContext.getFileContext(local(conf).afs, conf)
+      else org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, conf)
+    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  /** Content of a file written by [[writeAtomically]], None if absent.
+    * Read past the checksum layer: the rename-over moves the file, then
+    * its `.crc`, so a reader between the two would find the new content
+    * under the old checksum and fail; the file's own rename is atomic.
+    */
+  def readAtomically(spark: SparkSession, path: String): Option[String] = {
+    val fs = hadoopFs(spark, path) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    try {
+      val in = fs.open(new org.apache.hadoop.fs.Path(path))
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Task count of a bucket-partitioned write touching `buckets` buckets:
+    * at most one task per core. A task may then write several `p=` dirs,
+    * but hash partitioning by `p` still gives each dir exactly one
+    * writer, so the layout stays one file per dir.
+    */
+  def writeTasks(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
+
+  /** Stage `rows` (which carry the bucket column `p`) as the version dir
+    * `versionDir` and return the buckets written. `buckets` bounds the
+    * number of distinct `p` values and sizes the write at
+    * [[writeTasks]]: an explicit partition count, so AQE cannot coalesce
+    * the write into one task that fills every dir in series. `answer`
+    * (destination, empty schema) claims the batch's answer rows staged
+    * under [[AnswerBucket]] out of the version ([[claimAnswer]]) before
+    * the listing, so the result holds data buckets only.
+    */
+  def stageVersion(rows: DataFrame, versionDir: String, buckets: Int,
+                   answer: Option[(String, org.apache.spark.sql.types.StructType)] = None)
+      : Seq[Long] = {
+    val spark = rows.sparkSession
+    rows.repartition(writeTasks(spark, buckets), org.apache.spark.sql.functions.col("p"))
+      .write.options(writeOptions).mode("overwrite").partitionBy("p")
+      .parquet(versionDir)
+    answer.foreach { case (dest, schema) => claimAnswer(spark, versionDir, dest, schema) }
+    listBuckets(spark, versionDir)
+  }
 
   /** Layout-version guard for stores whose PHYSICAL row encoding has
     * changed across releases (e.g. the near-dup index's v1 → v2 move of
@@ -406,40 +512,29 @@ private[graft] object BucketState {
     */
   def checkOrStampLayout(spark: SparkSession, stateDir: String,
                          m: Manifest, layoutId: String): Unit = {
-    val fs = hadoopFs(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_LAYOUT")
     // stamp via tmp + atomic rename (the manifest pattern): the earlier
     // direct create-then-write left an EMPTY stamp when a SIGKILL landed
     // between the create and the write, and every relaunch then refused
     // the store as a layout mismatch — caught by the r15 chaos soak
     // (kill 15 of 20 landed exactly in that window on the kb overlay)
-    def stamp(): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_LAYOUT.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(layoutId.getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri,
-          spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    def stamp(): Unit = writeAtomically(spark, s"$stateDir/_LAYOUT", layoutId)
+    readAtomically(spark, s"$stateDir/_LAYOUT").map(_.trim) match {
+      case Some(found) =>
+        if (found.isEmpty && m.buckets.isEmpty)
+          // torn stamp from a pre-atomic-write release's crash window:
+          // nothing committed, so re-stamping loses nothing
+          stamp()
+        else require(found == layoutId,
+          s"state at $stateDir has layout '$found' but this reader expects " +
+            s"'$layoutId' — rebuild the index; it carries no cross-layout " +
+            "durability promise")
+      case None if m.buckets.nonEmpty =>
+        throw new IllegalStateException(
+          s"state at $stateDir has committed segments but no _LAYOUT stamp " +
+            s"(written by a pre-'$layoutId' release) — rebuild the index; " +
+            "it carries no cross-layout durability promise")
+      case None => stamp()
     }
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val found =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (found.isEmpty && m.buckets.isEmpty)
-        // torn stamp from a pre-atomic-write release's crash window:
-        // nothing committed, so re-stamping loses nothing
-        stamp()
-      else require(found == layoutId,
-        s"state at $stateDir has layout '$found' but this reader expects " +
-          s"'$layoutId' — rebuild the index; it carries no cross-layout " +
-          "durability promise")
-    } else if (m.buckets.nonEmpty) {
-      throw new IllegalStateException(
-        s"state at $stateDir has committed segments but no _LAYOUT stamp " +
-          s"(written by a pre-'$layoutId' release) — rebuild the index; " +
-          "it carries no cross-layout durability promise")
-    } else stamp()
   }
 
   /** `_CURRENT` manifest: one `bucket,version` line per live SEGMENT
@@ -449,22 +544,14 @@ private[graft] object BucketState {
     * one `fp,version,hash` line for the committing batch. Empty = no
     * committed state.
     */
-  def readManifest(spark: SparkSession, stateDir: String): Manifest = {
-    val fs = hadoopFs(spark, stateDir)
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT")
-    if (!fs.exists(cur)) Manifest(Map.empty, None)
-    else {
-      val in = fs.open(cur)
-      try {
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).map(_.split(",")).toSeq
-        Manifest(
-          lines.collect { case Array(b, v) => b.toLong -> v.toLong }
-            .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap,
-          lines.collectFirst { case Array("fp", v, h) => v.toLong -> h.toLong })
-      } finally in.close()
+  def readManifest(spark: SparkSession, stateDir: String): Manifest =
+    readAtomically(spark, s"$stateDir/_CURRENT").fold(Manifest(Map.empty, None)) { text =>
+      val lines = text.split("\n").toSeq.filter(_.nonEmpty).map(_.split(","))
+      Manifest(
+        lines.collect { case Array(b, v) => b.toLong -> v.toLong }
+          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap,
+        lines.collectFirst { case Array("fp", v, h) => v.toLong -> h.toLong })
     }
-  }
 
   /** Order-independent fingerprint of a batch's input rows (xor of
     * per-row xxhash64, count mixed in so duplicate pairs cannot cancel to
@@ -546,23 +633,11 @@ private[graft] object BucketState {
 
   def commitManifest(spark: SparkSession, stateDir: String,
                      manifest: Map[Long, Set[Long]],
-                     fp: Option[(Long, Long)]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT")
-    val fs = hadoopFs(spark, stateDir)
-    val out = fs.create(tmp, true)
-    try out.write(
+                     fp: Option[(Long, Long)]): Unit =
+    writeAtomically(spark, s"$stateDir/_CURRENT",
       (manifest.toSeq.flatMap { case (b, vs) => vs.map(b -> _) }.sorted
         .map { case (b, v) => s"$b,$v" }
-        ++ fp.map { case (v, h) => s"fp,$v,$h" }).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace primitive
-    // (plain FileSystem.rename won't clobber on local/HDFS). On stores
-    // without atomic rename the deployment pins the manifest elsewhere.
-    org.apache.hadoop.fs.FileContext.getFileContext(cur.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+        ++ fp.map { case (v, h) => s"fp,$v,$h" }).mkString("\n"))
 
   /** Union of each referenced segment's bucket dirs, partition-pruned:
     * group the (bucket → segment versions) map by version, one pruned
@@ -570,15 +645,11 @@ private[graft] object BucketState {
     * nBuckets; replace-merge writers keep 1-2 versions live, append
     * writers as many as batches since the last [[compact]]). `empty`
     * supplies the schema-correct zero-state (must already carry the `p`
-    * column).
-    */
-  /** `readSchema`, when given, pins every per-version read to an EXPLICIT
-    * schema (it must include the `p` partition column): parquet null-fills
-    * requested fields a file lacks, so version dirs written under an
-    * OLDER, narrower image struct (pre-ADD-COLUMN) read back widened —
-    * schema evolution over at-rest state without rewriting untouched
-    * buckets. Without it the per-version schemas are inferred (and must
-    * agree), the pre-evolution behavior.
+    * column), and its schema pins every read, so no read runs a footer
+    * (schema inference) job. Parquet null-fills requested fields a file
+    * lacks, so version dirs written under an OLDER, narrower image
+    * struct (pre-ADD-COLUMN) read back widened — schema evolution over
+    * at-rest state without rewriting untouched buckets.
     *
     * Each version's dirs are read in groups no larger than the session's
     * `parallelPartitionDiscovery.threshold`: one `parquet(...)` call over
@@ -586,26 +657,19 @@ private[graft] object BucketState {
     * dir), which at 64 buckets cost more than the read it served. Below
     * the threshold the dirs are listed serially on the driver — cheap
     * because the paths are known leaf dirs, never a scan of the whole
-    * state root. Without `readSchema` only a version's first group infers
-    * its schema (one footer job, as before); the rest reuse it.
+    * state root.
     */
   def readBuckets(spark: SparkSession, stateDir: String,
-                  manifest: Map[Long, Set[Long]], empty: => DataFrame,
-                  readSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+                  manifest: Map[Long, Set[Long]], empty: => DataFrame): DataFrame = {
     val pairs = manifest.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
     if (pairs.isEmpty) return empty
+    val schema = empty.schema
     val group = math.max(1,
       spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
     pairs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (v, entries) =>
-      def read(schema: Option[org.apache.spark.sql.types.StructType], bs: Seq[Long]) = {
-        val reader = spark.read.option("basePath", s"$stateDir/v=$v")
-        schema.fold(reader)(reader.schema)
-          .parquet(bs.map(b => s"$stateDir/v=$v/p=$b"): _*)
-      }
-      val groups = entries.map(_._2).sorted.grouped(group).toSeq
-      val first = read(readSchema, groups.head)
-      first +: groups.tail.map(read(Some(readSchema.getOrElse(first.schema)), _))
+      entries.map(_._2).sorted.grouped(group).map(bs =>
+        spark.read.option("basePath", s"$stateDir/v=$v").schema(schema)
+          .parquet(bs.map(b => s"$stateDir/v=$v/p=$b"): _*))
     }.reduce(_.unionByName(_))
   }
 
@@ -652,7 +716,7 @@ private[graft] object BucketState {
     }
     else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-      .write.mode("overwrite").parquet(destDir)
+      .write.options(writeOptions).mode("overwrite").parquet(destDir)
   }
 
   /** Buckets actually present under one version dir. */
@@ -695,18 +759,13 @@ private[graft] object BucketState {
     * time). `resolve` must preserve the `p` column and must not move
     * rows across buckets.
     */
-  def compact(spark: SparkSession, stateDir: String,
+  def compact(spark: SparkSession, stateDir: String, empty: => DataFrame,
               resolve: DataFrame => DataFrame = identity): Unit = {
     val m = readManifest(spark, stateDir)
     if (m.buckets.isEmpty) return
     val newVersion = m.buckets.values.flatten.max + 1
-    val all = resolve(readBuckets(spark, stateDir, m.buckets,
-      // non-empty manifest ⇒ the empty fallback is never consulted
-      sys.error("unreachable")))
-    all.repartition(org.apache.spark.sql.functions.col("p"))
-      .write.mode("overwrite").partitionBy("p")
-      .parquet(s"$stateDir/v=$newVersion")
-    val next = listBuckets(spark, s"$stateDir/v=$newVersion")
+    val next = stageVersion(resolve(readBuckets(spark, stateDir, m.buckets, empty)),
+        s"$stateDir/v=$newVersion", m.buckets.size)
       .map(_ -> Set(newVersion)).toMap
     commitManifest(spark, stateDir, next, m.fp)
     // the session view is stale by key after the fold (its pairs were
@@ -743,20 +802,15 @@ private[graft] object BucketState {
     * an unlocked read-modify-write commit would clobber this swap, and
     * an unleased read would race the post-swap GC.
     */
-  def compactConcurrent(spark: SparkSession, stateDir: String,
+  def compactConcurrent(spark: SparkSession, stateDir: String, empty: => DataFrame,
                         beforeSwap: () => Unit = () => (),
                         resolve: DataFrame => DataFrame = identity): Unit = {
-    import org.apache.spark.sql.functions.col
     val m = readManifest(spark, stateDir)
     if (m.buckets.isEmpty) return
     val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
     try {
-      resolve(readBuckets(spark, stateDir, m.buckets,
-          sys.error("unreachable — manifest non-empty")))
-        .repartition(col("p"))
-        .write.mode("overwrite").partitionBy("p")
-        .parquet(s"$stateDir/v=$newVersion")
-      val outBuckets = listBuckets(spark, s"$stateDir/v=$newVersion").toSet
+      val outBuckets = stageVersion(resolve(readBuckets(spark, stateDir, m.buckets, empty)),
+        s"$stateDir/v=$newVersion", m.buckets.size).toSet
       beforeSwap()
       val merged = manifestLock(stateDir).synchronized {
         val mNow = readManifest(spark, stateDir)
@@ -799,15 +853,15 @@ private[graft] object BucketState {
     * replica's `maybeCompact`.
     */
   def maybeCompactConcurrent(spark: SparkSession, stateDir: String,
-                             async: Boolean,
+                             async: Boolean, empty: => DataFrame,
                              resolve: DataFrame => DataFrame = identity): Unit =
-    if (!async) compactConcurrent(spark, stateDir, resolve = resolve)
+    if (!async) compactConcurrent(spark, stateDir, empty, resolve = resolve)
     else {
       val flag = compactingFlags.getOrElseUpdate(
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
-          try compactConcurrent(spark, stateDir, resolve = resolve)
+          try compactConcurrent(spark, stateDir, empty, resolve = resolve)
           catch {
             case e: Throwable =>
               System.err.println(s"[index] background compaction failed: ${e.getMessage}")

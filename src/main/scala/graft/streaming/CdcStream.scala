@@ -254,7 +254,8 @@ object CdcStream {
     }
     mergeBatch(prev, batch, tombstoneGcBelow, spec)
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$stateDir/v=${batchId + 1}")
+      .write.options(BucketState.writeOptions).mode("overwrite")
+      .parquet(s"$stateDir/v=${batchId + 1}")
     pruneVersions(spark, stateDir, keep = retainVersions)
   }
 
@@ -293,9 +294,11 @@ object CdcStream {
         val parsed = Changelog.parsedEnvelopes(rawBatch, valueCol).persist()
         try {
           Changelog.deadLettersOfParsed(parsed, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$deadLetterDir/batch=$batchId")
           Changelog.schemaHistoryOfParsed(parsed)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$schemaHistoryDir/batch=$batchId")
           val changelog = Changelog.changelogOfParsed(parsed, kafkaTsCol)
           applyVersionedBatch(changelog, batchId, auditDir, stateDir,
             retainVersions, CdcSchema.invoiceSpec, tombstoneGcBelow)
@@ -344,12 +347,14 @@ object CdcStream {
         val cached = rawBatch.persist() // history route + parse + dead letters
         try {
           Changelog.schemaHistory(cached, valueCol)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$schemaHistoryDir/batch=$batchId")
           val (espec, etype) =
             evolvedSpec(spark, schemaHistoryDir, spec, imageType, tableName)
           val parsed = Changelog.parsedEnvelopes(cached, valueCol, etype)
           Changelog.deadLettersOfParsed(parsed, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$deadLetterDir/batch=$batchId")
           // validity stays gated on the BASE spec: added columns are
           // nullable, so their absence is data, not a partial parse
           val changelog = Changelog.changelogOfParsed(parsed, None, spec)
@@ -415,12 +420,14 @@ object CdcStream {
         val cached = rawBatch.persist() // history route + sliced parse + dead letters
         try {
           Changelog.schemaHistory(cached, valueCol)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$schemaHistoryDir/batch=$batchId")
           val ddls = fullHistory(spark, schemaHistoryDir, tableName)
           val (espec, etype, epochs) =
             graft.cdc.SchemaEvolution.evolveFull(spec, imageType, ddls)
           Changelog.deadLettersEpochs(cached, epochs, etype, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
+            .write.options(BucketState.writeOptions).mode("overwrite")
+            .parquet(s"$deadLetterDir/batch=$batchId")
           val changelog = Changelog.fromEnvelopeJsonEpochs(cached, epochs, etype, valueCol)
           val watermark = ddls.map(_._1).maxOption.getOrElse(Long.MinValue)
           applyPartitionedBatch(changelog, batchId, auditDir, stateDir,
@@ -618,7 +625,7 @@ object CdcStream {
     * the extra `batch` partition column.
     */
   private def writeAudit(batch: DataFrame, auditDir: String, batchId: Long): Unit =
-    auditProjection(batch).write.mode("overwrite")
+    auditProjection(batch).write.options(BucketState.writeOptions).mode("overwrite")
       .parquet(s"$auditDir/batch=$batchId")
 
   /** Typed per-key state via `flatMapGroupsWithState` — the
@@ -820,24 +827,20 @@ object CdcStream {
         // (1) Stage this batch's buckets under its OWN version dir —
         // strictly newer than anything `prev` reads (checkBatch
         // guarantees it), so no overwrite-what-you-read hazard and no
-        // extra staging copy. repartition by p into at most one task per
-        // core ([[writeTasks]]): hash partitioning still sends each
-        // bucket to exactly one task, so the layout stays one file per
-        // touched `p=` dir, while a backfill touching all 64 buckets
-        // runs 4 write tasks on 4 cores, not 64 — per-task scheduling
-        // is the dominant per-commit cost at micro-batch sizes.
-        tr("merge_write")(mergeBatch(prev.drop("p"), batch, spec = spec)
-          .withColumn("p",
-            when(col("key").isNull, lit(-1L))
-              .otherwise(bucketOf(col("key"), keyType)))
-          .repartition(writeTasks(spark, touched.size), col("p"))
-          .write.mode("overwrite").partitionBy("p").parquet(s"$stateDir/v=$newVersion"))
+        // extra staging copy. At most one write task per core
+        // (BucketState.stageVersion): a backfill touching all 64 buckets
+        // runs 4 write tasks on 4 cores, not 64 — per-task scheduling is
+        // the dominant per-commit cost at micro-batch sizes. The result
+        // is the buckets actually present in the output (a truncate can
+        // empty a bucket entirely — it must drop out of the manifest, the
+        // case dynamic partition overwrite silently got wrong).
+        val outBuckets = tr("merge_write")(BucketState.stageVersion(
+          mergeBatch(prev.drop("p"), batch, spec = spec)
+            .withColumn("p",
+              when(col("key").isNull, lit(-1L))
+                .otherwise(bucketOf(col("key"), keyType))),
+          s"$stateDir/v=$newVersion", touched.size))
         onStaged.foreach(_(s"$stateDir/v=$newVersion"))
-
-        // Buckets actually present in the output (a truncate can empty a
-        // bucket entirely — it must drop out of the manifest, the case
-        // dynamic partition overwrite silently got wrong).
-        val outBuckets = tr("list_buckets")(listBuckets(spark, s"$stateDir/v=$newVersion"))
         val base = if (hasTruncate) Map.empty[Long, Set[Long]] else manifest
         val next = (base -- touched) ++ outBuckets.map(_ -> Set(newVersion))
 
@@ -922,7 +925,9 @@ object CdcStream {
         val maxSegs =
           if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
         if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-          maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction)
+          maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction,
+            rawBatch.schema("after").dataType
+              .asInstanceOf[org.apache.spark.sql.types.StructType])
         ()
       }
       .start()
@@ -943,14 +948,16 @@ object CdcStream {
     */
   private[graft] def maybeCompact(spark: SparkSession, stateDir: String,
                                   nBuckets: Int, spec: CdcSchema.CdcTableSpec,
-                                  async: Boolean): Unit =
-    if (!async) compactLsm(spark, stateDir, nBuckets, spec)
+                                  async: Boolean,
+                                  imageType: org.apache.spark.sql.types.StructType =
+                                    CdcSchema.invoiceType): Unit =
+    if (!async) compactLsm(spark, stateDir, nBuckets, spec, imageType = imageType)
     else {
       val flag = compactingFlags.getOrElseUpdate(
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
-          try compactLsm(spark, stateDir, nBuckets, spec)
+          try compactLsm(spark, stateDir, nBuckets, spec, imageType = imageType)
           catch {
             case e: Throwable =>
               System.err.println(s"[lsm] background compaction failed: ${e.getMessage}")
@@ -1037,10 +1044,9 @@ object CdcStream {
         // hand-built keyless non-truncate event from poisoning the
         // horizon (same guard as mergeBatch's ingress).
         // Sized by nBuckets, not the touched-bucket count (the stats job
-        // is still running), capped at one task per core like the
-        // replace-merge write: each bucket still lands in one task, so
-        // one file per touched `p=` dir.
-        tr("segment_write")(batch
+        // is still running); the listing it returns is only used on the
+        // commit path.
+        val outBuckets = tr("segment_write")(BucketState.stageVersion(batch
           .filter(
             coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}"))
               .isNotNull ||
@@ -1051,10 +1057,8 @@ object CdcStream {
             col("pos"), col("after"))
           .withColumn("p",
             when(col("key").isNull, lit(-1L))
-              .otherwise(bucketOf(col("key"), keyType)))
-          .repartition(writeTasks(spark, nBuckets), col("p"))
-          .write.mode("overwrite").partitionBy("p")
-          .parquet(s"$stateDir/v=$newVersion"))
+              .otherwise(bucketOf(col("key"), keyType))),
+          s"$stateDir/v=$newVersion", nBuckets + 1))
         val statRow = tr("stats_await")(Await.result(statF, Duration.Inf))
         val batchFp = statRow.getLong(0) ^
           java.lang.Long.rotateLeft(statRow.getLong(1), 32)
@@ -1065,8 +1069,6 @@ object CdcStream {
             // the in-flight registration so the GC below removes it.
             Await.result(auditF, Duration.Inf)
           case BucketState.Proceed(_) =>
-            val outBuckets =
-              tr("list_buckets")(listBuckets(spark, s"$stateDir/v=$newVersion"))
             tr("audit_await")(Await.result(auditF, Duration.Inf))
             // Commit under the manifest lock against a FRESH read: a
             // background compaction may have swapped segment sets since
@@ -1172,10 +1174,8 @@ object CdcStream {
     val newVersion = BucketState.reserveVersion(stateDir,
       m0.buckets.values.flatten.reduceOption(_ max _).getOrElse(0L) + 1)
     try {
-      tombs.coalesce(1).write.mode("overwrite").partitionBy("p")
-        .parquet(s"$stateDir/v=$newVersion")
       // an empty key frame stages no partition — commit nothing
-      if (listBuckets(spark, s"$stateDir/v=$newVersion")
+      if (BucketState.stageVersion(tombs, s"$stateDir/v=$newVersion", 1)
             .contains(LsmRetractBucket))
         BucketState.manifestLock(stateDir).synchronized {
           val mNow = readManifest(spark, stateDir)
@@ -1201,12 +1201,13 @@ object CdcStream {
     * common case).
     */
   private def lsmRetractions(spark: SparkSession, stateDir: String,
-                             m: BucketState.Manifest): Option[DataFrame] =
+                             m: BucketState.Manifest, spec: CdcSchema.CdcTableSpec,
+                             imageType: org.apache.spark.sql.types.StructType)
+      : Option[DataFrame] =
     if (!m.buckets.contains(LsmRetractBucket)) None
     else Some(
-      BucketState.readBuckets(spark, stateDir,
-          m.buckets.view.filterKeys(_ == LsmRetractBucket).toMap,
-          sys.error("unreachable — bucket present"))
+      readBuckets(spark, stateDir,
+          m.buckets.view.filterKeys(_ == LsmRetractBucket).toMap, spec, imageType)
         .groupBy(col("key")).agg(max(col("pos")).as("rpos"))
         .withColumnRenamed("key", "_rkey"))
 
@@ -1259,10 +1260,9 @@ object CdcStream {
                        imageType: org.apache.spark.sql.types.StructType): DataFrame = {
     val m = readManifest(spark, stateDir)
     resolveSegments(maskRetracted(
-      BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-        emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
+      readBuckets(spark, stateDir, lsmDataBuckets(m), spec, imageType)
         .drop("p"),
-      lsmRetractions(spark, stateDir, m)))
+      lsmRetractions(spark, stateDir, m, spec, imageType)))
   }
 
   /** Time-travel snapshot: the replica as of position `asOfPos`, read
@@ -1299,10 +1299,9 @@ object CdcStream {
     val m = readManifest(spark, stateDir)
     snapshotOfFor(
       resolveSegments(maskRetracted(
-        BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-          emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
+        readBuckets(spark, stateDir, lsmDataBuckets(m), spec, imageType)
           .drop("p"),
-        lsmRetractions(spark, stateDir, m))
+        lsmRetractions(spark, stateDir, m, spec, imageType))
         .filter(col("pos") <= asOfPos)),
       spec)
   }
@@ -1342,10 +1341,9 @@ object CdcStream {
     // takedown out-of-band; see the retraction section)
     val m = readManifest(spark, stateDir)
     val segs = maskRetracted(
-        BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-          emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
+        readBuckets(spark, stateDir, lsmDataBuckets(m), spec, imageType)
           .drop("p"),
-        lsmRetractions(spark, stateDir, m))
+        lsmRetractions(spark, stateDir, m, spec, imageType))
       .filter(col("pos") <= toPos)
     // BOTH prefix winners from ONE keyed aggregation over ONE segment
     // scan (two resolveSegments calls would read the log twice): the
@@ -1377,28 +1375,13 @@ object CdcStream {
   /** Oldest answerable as-of position (Long.MinValue until a compaction
     * has folded history).
     */
-  def readTtFloor(spark: SparkSession, stateDir: String): Long = {
-    val fs = BucketState.hadoopFs(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_TTFLOOR")
-    if (!fs.exists(p)) Long.MinValue
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  def readTtFloor(spark: SparkSession, stateDir: String): Long =
+    BucketState.readAtomically(spark, s"$stateDir/_TTFLOOR")
+      .fold(Long.MinValue)(_.trim.toLong)
 
   private def writeTtFloor(spark: SparkSession, stateDir: String,
-                           floor: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_TTFLOOR.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_TTFLOOR")
-    val fs = BucketState.hadoopFs(spark, stateDir)
-    val out = fs.create(tmp, true)
-    try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(cur.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+                           floor: Long): Unit =
+    BucketState.writeAtomically(spark, s"$stateDir/_TTFLOOR", floor.toString)
 
   /** Fold an LSM state's segment lists back to one resolved version per
     * bucket: below-horizon rows are erased for good, markers and the
@@ -1423,7 +1406,9 @@ object CdcStream {
     */
   def compactLsm(spark: SparkSession, stateDir: String, nBuckets: Int,
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                 beforeSwap: () => Unit = () => ()): Unit = {
+                 beforeSwap: () => Unit = () => (),
+                 imageType: org.apache.spark.sql.types.StructType =
+                   CdcSchema.invoiceType): Unit = {
     val m = readManifest(spark, stateDir)
     // nothing to fold on an empty store, or one holding only retraction
     // tombstones (a takedown can precede the first data batch)
@@ -1436,10 +1421,9 @@ object CdcStream {
       // disk here; tombstones themselves are read separately (they are
       // not events — a null-image tombstone reaching resolveSegments
       // would read as a delete marker)
-      val tombsOpt = lsmRetractions(spark, stateDir, m)
+      val tombsOpt = lsmRetractions(spark, stateDir, m, spec, imageType)
       val resolved = resolveSegments(maskRetracted(
-          BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-            sys.error("unreachable — manifest non-empty")).drop("p"),
+          readBuckets(spark, stateDir, lsmDataBuckets(m), spec, imageType).drop("p"),
           tombsOpt))
         .persist()
       try {
@@ -1473,13 +1457,11 @@ object CdcStream {
           .withColumn("p",
             when(col("key").isNull, lit(-1L))
               .otherwise(bucketOf(col("key"), keyType)))
-        keptTombs.fold(outRows)(outRows.unionByName(_))
-          .repartition(col("p"))
-          .write.mode("overwrite").partitionBy("p")
-          .parquet(s"$stateDir/v=$newVersion")
+        val outBuckets = BucketState.stageVersion(
+          keptTombs.fold(outRows)(outRows.unionByName(_)),
+          s"$stateDir/v=$newVersion", m.buckets.size).toSet
         writeTtFloor(spark, stateDir,
           math.max(folded, readTtFloor(spark, stateDir)))
-        val outBuckets = listBuckets(spark, s"$stateDir/v=$newVersion").toSet
         beforeSwap()
         val next = BucketState.manifestLock(stateDir).synchronized {
           val mNow = readManifest(spark, stateDir)
@@ -1512,28 +1494,17 @@ object CdcStream {
                              fp: Option[(Long, Long)]): Unit =
     BucketState.commitManifest(spark, stateDir, manifest, fp)
 
-  /** Replace-merge state read under the explicit state schema of
-    * `(spec, imageType)` — no footer job, and an empty manifest yields an
-    * empty state of the same shape.
+  /** Bucket read (replace-merge or LSM) under the explicit state schema
+    * of `(spec, imageType)` — no footer job, and an empty manifest yields
+    * an empty state of the same shape.
     */
   private def readBuckets(spark: SparkSession, stateDir: String,
                           manifest: Map[Long, Set[Long]],
                           spec: CdcSchema.CdcTableSpec,
                           imageType: org.apache.spark.sql.types.StructType): DataFrame =
     BucketState.readBuckets(spark, stateDir, manifest,
-      emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)),
-      Some(stateSchemaFor(spec, imageType)))
-
-  /** Task count of a bucket-partitioned state write touching `buckets`
-    * buckets: at most one task per core. A task may then write several
-    * `p=` dirs, but hash partitioning by `p` still gives each dir exactly
-    * one writer, so the layout stays one file per dir.
-    */
-  private def writeTasks(spark: SparkSession, buckets: Int): Int =
-    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
-
-  private def listBuckets(spark: SparkSession, versionDir: String): Seq[Long] =
-    BucketState.listBuckets(spark, versionDir)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        stateSchemaFor(spec, imageType)))
 
   private def hadoopFs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     BucketState.hadoopFs(spark, path)

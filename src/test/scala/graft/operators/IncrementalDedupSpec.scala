@@ -196,7 +196,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val before = IncrementalDedup.snapshot(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
-    graft.streaming.BucketState.compact(spark, dir)
+    graft.streaming.BucketState.compact(spark, dir, IncrementalDedup.emptyIdx(spark))
     val m = graft.streaming.BucketState.readManifest(spark, dir)
     assert(m.buckets.values.flatten.toSet.size === 1, "one live version after compaction")
     val after = IncrementalDedup.snapshot(spark, dir)

@@ -50,7 +50,5 @@ class ReadBucketsSpec extends AnyFunSuite {
     assert(expected.size === v1.size * 3 + v2.size * 3)
 
     assert(rows(BucketState.readBuckets(spark, base, manifest, empty)) === expected)
-    assert(rows(BucketState.readBuckets(spark, base, manifest, empty, Some(schema))) ===
-      expected)
   }
 }

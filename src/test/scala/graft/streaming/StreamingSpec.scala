@@ -292,7 +292,9 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8).awaitTermination(120000)
 
-    graft.streaming.BucketState.compact(spark, s"$base/state")
+    graft.streaming.BucketState.compact(spark, s"$base/state",
+      graft.streaming.CdcStream.emptyState(spark)
+        .withColumn("p", org.apache.spark.sql.functions.lit(-1L)))
     val m = graft.streaming.BucketState.readManifest(spark, s"$base/state")
     assert(m.buckets.values.flatten.toSet.size === 1)
     val snap1 = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
